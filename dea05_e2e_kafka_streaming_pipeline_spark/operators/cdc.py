@@ -283,9 +283,9 @@ def scd2_snapshot(history: DataFrame, as_of) -> DataFrame:
 
     Scale shape: a pure filter — no join, no shuffle. On a history
     table written sorted/partitioned by ``valid_from`` (e.g. via
-    write_zordered), the ``valid_from <= as_of`` predicate prunes
-    row groups by footer min/max, so old snapshots read a fraction of
-    the history."""
+    ``layout.write_zordered``), the ``valid_from <= as_of`` predicate
+    prunes row groups by footer min/max, so old snapshots read a
+    fraction of the history."""
     # string timestamps cast explicitly; numeric/other sequence domains
     # (scd2_history accepts any orderable seq col) compare as-is
     ts = F.lit(as_of)

@@ -106,13 +106,14 @@ class AvroLiteReader(DataSourceReader):
 
 @dataclass
 class AvroCommitMessage(WriterCommitMessage):
-    temp_path: str
-    final_path: str
+    temp_path: str | None  # None: the task's partition was empty
+    final_path: str | None
     n_records: int
 
 
 class AvroLiteWriter(DataSourceWriter):
-    """Two-phase-commit Avro container writer (one file per task)."""
+    """Two-phase-commit Avro container writer (one file per non-empty
+    task; empty partitions land no file)."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         import uuid
@@ -138,6 +139,8 @@ class AvroLiteWriter(DataSourceWriter):
         pid = tc.partitionId() if tc is not None else 0
         avro_schema = avro_lite.spark_schema_to_avro(self._schema)
         records = [row.asDict(recursive=True) for row in iterator]
+        if not records:
+            return AvroCommitMessage(None, None, 0)
         os.makedirs(self._path, exist_ok=True)
         final = os.path.join(
             self._path, f"part-{pid:05d}-{self._job_id}.avro"
@@ -152,18 +155,18 @@ class AvroLiteWriter(DataSourceWriter):
         )
 
     def commit(self, messages):
-        if self._overwrite:
-            keep = {m.final_path for m in messages if m is not None}
+        landed = [m for m in messages if m is not None and m.temp_path]
+        if self._overwrite and os.path.isdir(self._path):
+            keep = {m.final_path for m in landed}
             for p in _list_avro_files(self._path):
                 if p not in keep:
                     os.remove(p)
-        for m in messages:
-            if m is not None:
-                os.replace(m.temp_path, m.final_path)
+        for m in landed:
+            os.replace(m.temp_path, m.final_path)
 
     def abort(self, messages):
         for m in messages:
-            if m is not None and os.path.exists(m.temp_path):
+            if m is not None and m.temp_path and os.path.exists(m.temp_path):
                 os.remove(m.temp_path)
 
 

@@ -17,7 +17,8 @@ environments can also produce Avro for downstream consumers.
 Scope note: this is a test/fixture utility, not the 100 TB ingest path —
 at scale Avro encode/decode runs JVM-side via spark-avro (``read_avro``
 in ``sources/registry.py``); this module's job is correctness ground
-truth plus the distributed fallback paths in ``registry``/``sinks``.
+truth plus the codec behind the jar-less ``format("avro_lite")``
+source (``sources/avro_datasource.py``).
 """
 
 from __future__ import annotations
@@ -150,7 +151,8 @@ def read_avro(path: str) -> tuple[dict, list]:
 
 def read_avro_schema(path: str, header_bytes: int = 1 << 20) -> dict:
     """Writer schema from the container HEADER only — no record decode
-    (the driver-side peek of the distributed scan reads just this).
+    (the driver-side schema peek of ``format("avro_lite")`` reads just
+    this).
     Avro headers are magic + metadata map + sync; 1 MiB covers any sane
     schema."""
     with open(path, "rb") as f:
@@ -166,10 +168,8 @@ def read_avro_schema(path: str, header_bytes: int = 1 << 20) -> dict:
 
 
 def read_avro_bytes(buf: bytes, name: str = "<bytes>") -> tuple[dict, list]:
-    """Decode an in-memory Avro container → (writer schema, records).
-    The executor-side entry point of the distributed fallback scan
-    (``registry.read_avro_distributed`` ships whole files via the
-    binaryFile source and decodes them here)."""
+    """Decode an in-memory Avro container → (writer schema, records);
+    :func:`read_avro` is this over one file's bytes."""
     r = _Reader(buf)
     path = name
     if r.read(4) != _MAGIC:

@@ -56,25 +56,37 @@ def write_zordered(
     cols: list[Column | str],
     bits: int = 16,
     num_files: int = 8,
-    fmt: str = "parquet",
 ) -> None:
-    """Cluster ``df`` on the Morton key of ``cols`` and write it:
-    one range shuffle on ``zval`` (equal-size output files via range
-    partitioning, robust to key skew) + an in-partition sort so each
-    row-group covers a contiguous Morton range — a tight K-dim
-    hyper-rectangle in the zone maps.
+    """Cluster ``df`` on the Morton key of ``cols`` and write it as
+    parquet: each key is range-normalized onto ``[0, 2**bits)`` from
+    one min/max aggregate (so keys of any domain — doubles, negative
+    ids, wide longs — use the full bit budget), interleaved with
+    :func:`zorder_key`, then one range shuffle on the key (equal-size
+    output files via range partitioning, robust to key skew) + an
+    in-partition sort so each row-group covers a contiguous Morton
+    range — a tight K-dim hyper-rectangle in the zone maps.
 
-    At 100 TB this is the table-maintenance OPTIMIZE job: cost is a
-    single full-table range shuffle, amortized over every subsequent
-    selective scan on any of the clustered columns."""
-    keyed = df.withColumn("_zval", zorder_key(cols, bits))
+    At 100 TB this is the table-maintenance OPTIMIZE job: cost is one
+    stats aggregate plus a single full-table range shuffle, amortized
+    over every subsequent selective scan on any of the clustered
+    columns."""
+    keys = [(F.col(c) if isinstance(c, str) else c).cast("double") for c in cols]
+    bounds = df.agg(*[f(k) for k in keys for f in (F.min, F.max)]).first()
+    levels = (1 << bits) - 1
+    ranked = []
+    for j, k in enumerate(keys):
+        lo, hi = bounds[2 * j], bounds[2 * j + 1]
+        if lo is None or hi <= lo:  # empty or constant key
+            ranked.append(F.lit(0))
+        else:
+            ranked.append(F.round((k - F.lit(lo)) / F.lit(hi - lo) * levels))
     (
-        keyed.repartitionByRange(num_files, "_zval")
+        df.withColumn("_zval", zorder_key(ranked, bits))
+        .repartitionByRange(num_files, "_zval")
         .sortWithinPartitions("_zval")
         .drop("_zval")
         .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 

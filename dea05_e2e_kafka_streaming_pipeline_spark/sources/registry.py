@@ -6,23 +6,25 @@ self-describing; schema inference is a full extra scan the engine never
 performs on large inputs.
 
 Avro and Delta are optional runtime dependencies (spark-avro /
-delta-spark jars); readers raise a clear error when the package is
-missing rather than failing deep inside the JVM.
+delta-spark jars). Delta readers raise a clear error when the package
+is missing rather than failing deep inside the JVM; Avro reads fall
+back to the engine's own jar-less ``format("avro_lite")`` source.
 
 Jar provisioning attempt (round 3, 2026-08-13): this container has no
 network (DNS resolution fails for repo1.maven.org; `curl` exit 6) and
 ships neither jar — the Spark distributions under /opt carry only core
 avro-1.12.1 (serialization lib, not the DataSource), and no local maven/
 ivy/sbt cache exists. The JVM paths therefore remain exercised through
-their error/gating tests only; the jar-less Avro story is instead made
-scale-credible by :func:`read_avro_distributed` (binaryFile +
-mapInPandas over the vendored pure-Python decoder — distributed, no
-driver materialization), verified against the reference's real Debezium
-captures.
+their error/gating tests only; the jar-less Avro story is carried by
+``format("avro_lite")`` (``sources/avro_datasource.py``: the vendored
+pure-Python decoder behind the Python Data Source API — one partition
+per container file, decoded on executors), verified against the
+reference's real Debezium captures.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -155,90 +157,27 @@ def read_csv_quarantine(
     return good, bad
 
 
-def read_avro(
-    spark: SparkSession, path: str, fallback: bool = False
-) -> DataFrame:
+# Spark's "no such data source" conditions; it raises the legacy code
+# specifically for ``avro`` (the connector ships as a separate module)
+_SOURCE_MISSING = ("DATA_SOURCE_NOT_FOUND", "_LEGACY_ERROR_TEMP_1139")
+
+
+def read_avro(spark: SparkSession, path: str) -> DataFrame:
     """Avro CDC dump scan (reference curated/dq_kafka.py:140-141).
 
-    Prefers the JVM spark-avro connector when its jar is on the
-    classpath (codegen decode, block-level splits). When absent —
-    this container, see docs/JAR_ATTEMPT.md — ``fallback=True``
-    switches to the ENGINE-NATIVE jar-less source: the vendored
-    pure-Python container codec registered as ``format("avro_lite")``
-    through the public PySpark 4 Python Data Source API
-    (``sources/avro_datasource.py``) — one partition per container
-    file, decoded on executors, never the driver.
+    Uses the JVM spark-avro connector when its jar is on the classpath
+    (codegen decode, block-level splits). When Spark cannot resolve the
+    ``avro`` source (jar absent, see docs/JAR_ATTEMPT.md) it reads with the engine's jar-less ``format("avro_lite")`` Python
+    data source (``sources/avro_datasource.py``): one partition per
+    container file, decoded on executors, never the driver. Any other
+    failure (missing path, corrupt file) is raised as-is.
     """
     try:
         return spark.read.format("avro").load(path)
-    except Exception as exc:  # pragma: no cover - depends on jar availability
-        if fallback:
-            return spark.read.format("avro_lite").load(path)
-        raise RuntimeError(
-            "Avro reads need the spark-avro package "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark-version>); "
-            "pass fallback=True to read with the engine's jar-less "
-            "format('avro_lite') Python data source (distributed, "
-            "per-file partitions). "
-            f"Underlying error: {exc}"
-        ) from exc
-
-
-def read_avro_distributed(
-    spark: SparkSession, path: str, spark_schema: T.StructType | None = None
-) -> DataFrame:
-    """Jar-less DISTRIBUTED Avro scan: the binaryFile source lists and
-    ships whole container files to executors, where each is decoded with
-    the vendored pure-Python reader (``sources/avro_lite.py``) inside an
-    Arrow-batched ``mapInPandas`` — no spark-avro required and no
-    driver-side materialization (upgrades ``read_avro(fallback=True)``,
-    which decodes on the driver).
-
-    The work unit is a FILE (Avro blocks within a file are not
-    range-split the way the JVM reader does), which matches the shape of
-    Kafka-topic dumps — many medium objects (reference layout:
-    ``curated/dq_kafka.py:140-141`` reads ``partition=0/*``). Pass
-    ``spark_schema`` to skip the driver-side peek of one file's embedded
-    writer schema.
-    """
-    import glob as _glob
-    import os
-
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources import avro_lite
-
-    if spark_schema is None:
-        if os.path.isdir(path):
-            cands = sorted(
-                p
-                for p in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-                if os.path.isfile(p)
-            )
-        else:
-            cands = sorted(_glob.glob(path)) or [path]
-        # skip _SUCCESS/.crc-style markers, matching the binaryFile
-        # source's own hidden-path filter, and read the HEADER only
-        cands = [
-            p for p in cands if not os.path.basename(p)[0] in ("_", ".")
-        ] or cands
-        schema0 = avro_lite.read_avro_schema(cands[0])
-        spark_schema = avro_lite.avro_to_spark_type(schema0)
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    names = [f.name for f in spark_schema.fields]
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            frames = []
-            for p, buf in zip(pdf["path"], pdf["content"]):
-                schema, records = avro_lite.read_avro_bytes(bytes(buf), name=p)
-                for rec in records:
-                    avro_lite.walk_logicals(rec, schema)
-                frames.append(pd.DataFrame.from_records(records, columns=names))
-            if frames:
-                yield pd.concat(frames)
-
-    return files.mapInPandas(decode, spark_schema)
+    except AnalysisException as exc:
+        if exc.getCondition() not in _SOURCE_MISSING:
+            raise
+    return spark.read.format("avro_lite").load(path)
 
 
 def read_xml(

@@ -19,7 +19,7 @@ takes an encryption parameter.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -70,94 +70,6 @@ def write_orc_partitioned(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
-
-
-def zorder_value(
-    cols: list[str],
-    stats: dict[str, tuple[float, float]],
-    bits: int = 10,
-) -> Column:
-    """Morton (Z-order) curve value over ``cols``: each column is
-    normalized to a ``bits``-bit integer using the provided
-    (min, max) ``stats``, and the bit patterns are interleaved — points
-    close in EVERY dimension get close z-values. Pure codegen column
-    arithmetic (2·bits shift/mask terms per column)."""
-    if len(cols) * bits > 63:
-        # Java shift amounts mask to 6 bits — positions >= 64 would
-        # silently wrap onto low bits and scramble the curve
-        raise ValueError(
-            f"z-value needs {len(cols)}x{bits} = {len(cols) * bits} bits; "
-            "max is 63 — lower `bits` or cluster fewer columns"
-        )
-    levels = (1 << bits) - 1
-    ints = []
-    for c in cols:
-        lo, hi = stats[c]
-        span = float(hi) - float(lo)
-        if span <= 0:
-            ints.append(F.lit(0).cast("long"))
-            continue
-        norm = (F.col(c).cast("double") - F.lit(float(lo))) / F.lit(span)
-        clamped = F.least(F.greatest(norm, F.lit(0.0)), F.lit(1.0))
-        ints.append(F.round(clamped * levels, 0).cast("long"))
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for i, v in enumerate(ints):
-        for b in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(v, b).bitwiseAND(F.lit(1)), b * n + i
-                )
-            )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 10,
-    num_files: int = 64,
-    stats: dict[str, tuple[float, float]] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered Parquet layout: rows are range-partitioned and
-    sorted by their Morton value over ``cols``, so every output file
-    covers a tight hyper-rectangle of the key space — per-file AND
-    per-row-group (min, max) ranges on ALL the clustered columns stay
-    narrow, which is what data skipping consumes. This is the
-    multi-column analog of the ivf_cell partition layout: partitioning
-    prunes on ONE column hierarchy, z-ordering makes min/max skipping
-    effective on EVERY clustered column simultaneously.
-
-    Where the skipping is exploited: parquet predicate pushdown skips
-    row groups inside each file (vanilla Spark, automatic — the engine's
-    scans push comparison filters, see tests/test_plans.py); file-level
-    skipping additionally needs a stats-tracking table format (Delta/
-    Iceberg `OPTIMIZE ZORDER` consumes exactly this layout). The
-    clustering benefit is asserted directly from parquet footer stats in
-    tests/test_medallion.py.
-
-    ``stats`` ((min, max) per column) skips the one driver-side stats
-    aggregation; at scale pass known bounds or reuse catalog stats.
-    """
-    if stats is None:
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-        row = df.agg(*aggs).collect()[0]
-        stats = {
-            c: (float(row[f"__mn_{c}"]), float(row[f"__mx_{c}"])) for c in cols
-        }
-    z = zorder_value(cols, stats, bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def write_bucketed_table(
@@ -380,52 +292,6 @@ def read_with_deletes(spark, path: str, key_col: str) -> DataFrame:
         return df
     dels = spark.read.parquet(f"{path}/_deletes").distinct()
     return df.join(F.broadcast(dels), key_col, "left_anti")
-
-
-def write_avro_distributed(
-    df: DataFrame,
-    path: str,
-    codec: str = "deflate",
-    record_name: str = "topLevelRecord",
-) -> dict:
-    """Jar-less DISTRIBUTED Avro sink: each partition encodes its rows
-    with the vendored pure-Python writer (``sources/avro_lite.py``) and
-    lands one container file — the write-side twin of
-    ``registry.read_avro_distributed`` (round-trip property-tested,
-    including against the schema of the reference's real Debezium
-    captures ``testing/streaming.public.order.avro``).
-
-    The work unit is a PARTITION → one ``part-NNNNN.avro`` object, the
-    same one-file-per-task shape as Spark's own file sinks; a
-    ``_SUCCESS`` marker lands only after the action completes, so
-    readers never observe a half-written directory as complete. Encoding
-    runs row-at-a-time in Python — acceptable for a SINK (write path is
-    I/O-bound; this is the jar-less fallback, spark-avro's JVM writer is
-    the 100 TB path). Requires a filesystem all executors can reach
-    (true in local mode and on any shared/posix mount; object stores
-    need the JVM writer). Returns the Avro writer schema used.
-    """
-    import os
-
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources import avro_lite
-
-    schema = avro_lite.spark_schema_to_avro(df.schema, name=record_name)
-    os.makedirs(path, exist_ok=True)
-
-    def write_partition(rows) -> None:
-        from pyspark import TaskContext
-
-        records = [r.asDict(recursive=True) for r in rows]
-        if not records:
-            return
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}.avro")
-        avro_lite.write_avro(out, schema, records, codec=codec)
-
-    df.foreachPartition(write_partition)
-    with open(os.path.join(path, "_SUCCESS"), "w"):
-        pass
-    return schema
 
 
 def drop_partitions_older_than(

@@ -54,6 +54,57 @@ def _manifest(table_path: str, version: int) -> dict:
         return json.load(f)
 
 
+def next_version(table_path: str) -> int:
+    """The version the next commit will try to publish."""
+    versions = snapshot_versions(table_path)
+    return (versions[-1] + 1) if versions else 0
+
+
+def resolve_version(table_path: str, version: int | None = None) -> int:
+    """``version`` checked against the log (default: the latest)."""
+    versions = snapshot_versions(table_path)
+    if not versions:
+        raise FileNotFoundError(f"no committed snapshots under {table_path}")
+    if version is None:
+        return versions[-1]
+    if version not in versions:
+        raise ValueError(f"version {version} not in {versions}")
+    return version
+
+
+def snapshot_files(table_path: str, version: int) -> list[str]:
+    """Full paths of the data files that make up ``version``."""
+    return [
+        os.path.join(table_path, f) for f in _manifest(table_path, version)["files"]
+    ]
+
+
+def publish_snapshot(
+    table_path: str, version: int, mode: str, sizes: dict[str, int]
+) -> None:
+    """Publish manifest ``version`` over the new data files ``sizes``
+    (table-relative path → bytes). Refuses a version that is already
+    committed (single-writer contract); ``mode="append"`` carries the
+    previous version's files forward. The manifest lands by write-temp
+    + atomic rename, so readers see it whole or not at all."""
+    versions = snapshot_versions(table_path)
+    if versions and versions[-1] >= version:
+        raise RuntimeError(
+            f"txlog: version {version} already committed "
+            "(concurrent writer?) — single-writer-per-table contract"
+        )
+    files = sorted(sizes)
+    if mode == "append" and versions:
+        files = _manifest(table_path, versions[-1])["files"] + files
+    log = _log_path(table_path)
+    os.makedirs(log, exist_ok=True)
+    manifest = {"version": version, "mode": mode, "files": files, "sizes": sizes}
+    tmp = os.path.join(log, f".v{version:06d}.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.rename(tmp, os.path.join(log, f"v{version:06d}.json"))
+
+
 def commit_snapshot(df: DataFrame, table_path: str, mode: str = "append") -> int:
     """Write ``df`` as new uniquely-named data files and publish the
     next snapshot version. ``mode="append"``: the new version = previous
@@ -63,32 +114,16 @@ def commit_snapshot(df: DataFrame, table_path: str, mode: str = "append") -> int
     Returns the committed version number."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite: {mode!r}")
-    versions = snapshot_versions(table_path)
-    version = (versions[-1] + 1) if versions else 0
-    data_dir = os.path.join(table_path, f"data-v{version:06d}")
+    version = next_version(table_path)
+    data_rel = f"data-v{version:06d}"
+    data_dir = os.path.join(table_path, data_rel)
     df.write.mode("error").parquet(data_dir)
-    new_files = sorted(
-        os.path.join(f"data-v{version:06d}", f)
+    sizes = {
+        os.path.join(data_rel, f): os.path.getsize(os.path.join(data_dir, f))
         for f in os.listdir(data_dir)
         if f.endswith(".parquet")
-    )
-    files = list(new_files)
-    if mode == "append" and versions:
-        files = _manifest(table_path, versions[-1])["files"] + files
-    log = _log_path(table_path)
-    os.makedirs(log, exist_ok=True)
-    manifest = {
-        "version": version,
-        "mode": mode,
-        "files": files,
-        "sizes": {
-            f: os.path.getsize(os.path.join(table_path, f)) for f in new_files
-        },
     }
-    tmp = os.path.join(log, f".v{version:06d}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, os.path.join(log, f"v{version:06d}.json"))  # atomic publish
+    publish_snapshot(table_path, version, mode, sizes)
     return version
 
 
@@ -98,17 +133,11 @@ def read_snapshot(
     """Scan the table AS OF ``version`` (default: latest). Reads exactly
     the manifest's file list — concurrent later commits are invisible
     (snapshot isolation for readers)."""
-    versions = snapshot_versions(table_path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {table_path}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions}")
-    files = _manifest(table_path, version)["files"]
+    version = resolve_version(table_path, version)
+    files = snapshot_files(table_path, version)
     if not files:
         raise ValueError(f"version {version} has no files")
-    return spark.read.parquet(*[os.path.join(table_path, f) for f in files])
+    return spark.read.parquet(*files)
 
 
 def snapshot_history(table_path: str) -> list[dict]:

@@ -23,8 +23,8 @@ append to a never-committed table publishes version 0.)
 - **Write**: classic two-phase commit on top of the manifest protocol:
   tasks write uniquely-named parquet files into the next version's
   data directory via pyarrow, the driver's ``commit()`` publishes the
-  manifest (write-temp + atomic rename, exactly
-  :func:`~.txlog.commit_snapshot`'s discipline) only after every task
+  manifest through :func:`~.txlog.publish_snapshot` (the same step
+  :func:`~.txlog.commit_snapshot` ends with) only after every task
   reported success; ``abort()`` removes the orphaned files. ``mode
   ("append")`` extends the previous manifest, ``mode("overwrite")``
   starts a fresh file list (old files stay readable via time travel).
@@ -39,7 +39,6 @@ so they can be mixed freely.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -56,22 +55,9 @@ from pyspark.sql.types import StructType
 from dea05_e2e_kafka_streaming_pipeline_spark.sources import txlog
 
 
-def _resolve_version(path: str, options: dict) -> int:
-    versions = txlog.snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"txlog: no committed snapshots under {path}")
+def _version(path: str, options: dict) -> int:
     raw = options.get("versionasof", options.get("versionAsOf"))
-    if raw is None:
-        return versions[-1]
-    version = int(raw)
-    if version not in versions:
-        raise ValueError(f"txlog: version {version} not in {versions}")
-    return version
-
-
-def _manifest_files(path: str, version: int) -> list[str]:
-    with open(os.path.join(path, "_log", f"v{version:06d}.json")) as f:
-        return [os.path.join(path, p) for p in json.load(f)["files"]]
+    return txlog.resolve_version(path, None if raw is None else int(raw))
 
 
 @dataclass
@@ -85,12 +71,12 @@ class TxlogReader(DataSourceReader):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("txlog: .load(path) is required")
-        self._version = _resolve_version(self._path, options)
+        self._version = _version(self._path, options)
 
     def partitions(self):
         return [
             TxlogFilePartition(p)
-            for p in _manifest_files(self._path, self._version)
+            for p in txlog.snapshot_files(self._path, self._version)
         ]
 
     def read(self, partition: TxlogFilePartition):
@@ -116,8 +102,7 @@ class TxlogWriter(DataSourceWriter):
         if not self._path:
             raise ValueError("txlog: .save(path) is required")
         self._overwrite = overwrite
-        prev = txlog.snapshot_versions(self._path)
-        self._version = (prev[-1] + 1) if prev else 0
+        self._version = txlog.next_version(self._path)
         self._data_rel = f"data-v{self._version:06d}"
 
     def write(self, iterator):
@@ -142,32 +127,12 @@ class TxlogWriter(DataSourceWriter):
         return TxlogCommitMessage(rel_path=rel, size=os.path.getsize(full))
 
     def commit(self, messages) -> None:
-        files = sorted(m.rel_path for m in messages)
-        versions = txlog.snapshot_versions(self._path)
-        if versions and versions[-1] >= self._version:
-            raise RuntimeError(
-                f"txlog: version {self._version} already committed "
-                "(concurrent writer?) — single-writer-per-table contract"
-            )
-        if not self._overwrite and versions:
-            with open(
-                os.path.join(self._path, "_log", f"v{versions[-1]:06d}.json")
-            ) as f:
-                files = json.load(f)["files"] + files
-        log = os.path.join(self._path, "_log")
-        os.makedirs(log, exist_ok=True)
-        manifest = {
-            "version": self._version,
-            "mode": "overwrite" if self._overwrite else "append",
-            "files": files,
-            "sizes": {
-                m.rel_path: m.size for m in messages
-            },
-        }
-        tmp = os.path.join(log, f".v{self._version:06d}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, os.path.join(log, f"v{self._version:06d}.json"))
+        txlog.publish_snapshot(
+            self._path,
+            self._version,
+            "overwrite" if self._overwrite else "append",
+            {m.rel_path: m.size for m in messages},
+        )
 
     def abort(self, messages) -> None:
         for m in messages:
@@ -190,8 +155,7 @@ class TxlogDataSource(DataSource):
         from pyspark.sql.types import StructField
 
         path = self.options["path"]
-        version = _resolve_version(path, self.options)
-        files = _manifest_files(path, version)
+        files = txlog.snapshot_files(path, _version(path, self.options))
         inferred = from_arrow_schema(pq.read_schema(files[0]))
         # Spark's own parquet reader surfaces every column as nullable
         # regardless of the footer's required flag; match it so the two

@@ -28,11 +28,45 @@ from collections.abc import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from dea05_e2e_kafka_streaming_pipeline_spark.operators.quality import (
     DataQualityValidator,
 )
+
+
+def _start(
+    writer: DataStreamWriter,
+    checkpoint: str,
+    output_mode: str,
+    available_now: bool,
+    trigger_seconds: int | None = None,
+) -> StreamingQuery:
+    """Shared sink wiring: checkpoint + output mode + trigger, then
+    start. ``available_now`` drains what is available and stops;
+    otherwise ``trigger_seconds`` sets a processing-time cadence (None:
+    Spark's default, the next batch as soon as the last one ends)."""
+    writer = writer.option("checkpointLocation", checkpoint).outputMode(output_mode)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
+def _read_existing(spark, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when no table is there yet
+    (missing path, or a directory holding no data files). Any other
+    read failure (IO, permissions, corrupt footer) propagates: a sink
+    that read-merge-overwrites its target must fail the batch so the
+    checkpoint retries it, never treat the target as empty and
+    overwrite accumulated state with this batch alone."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return None
 
 
 def ingest_to_lake(
@@ -58,17 +92,9 @@ def ingest_to_lake(
         ),
     )
     writer = (
-        stamped.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("date")
-        .outputMode("append")
+        stamped.writeStream.format(fmt).option("path", path).partitionBy("date")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, checkpoint, "append", available_now, trigger_seconds)
 
 
 def dq_gated_sink(
@@ -98,16 +124,8 @@ def dq_gated_sink(
             lambda df: df.write.mode("append").json(quarantine_path),
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_gate)
+    return _start(writer, checkpoint, "append", available_now, trigger_seconds)
 
 
 def upsert_batch_into_parquet(
@@ -152,14 +170,11 @@ def upsert_batch_into_parquet(
     )
     if not affected:
         return
-    try:
-        target = (
-            spark.read.parquet(target_dir)
-            .filter(F.col("bucket").isin(affected))
-            .select(*data_cols)
-        )
-    except Exception:  # first batch: no target yet
+    target = _read_existing(spark, target_dir)
+    if target is None:  # first batch: no target yet
         target = spark.createDataFrame([], batch.select(*data_cols).schema)
+    else:
+        target = target.filter(F.col("bucket").isin(affected)).select(*data_cols)
     from dea05_e2e_kafka_streaming_pipeline_spark.operators.cdc import (
         apply_cdc_changes,
     )
@@ -227,16 +242,8 @@ def stream_upsert_sink(
             n_buckets=n_buckets,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply)
+    return _start(writer, checkpoint, "update", available_now, trigger_seconds)
 
 
 def dedup_stream(
@@ -401,14 +408,8 @@ def enrich_stream_sink(
         dim = batch_df.sparkSession.read.parquet(dim_path)
         batch_df.join(F.broadcast(dim), on, how).write.mode("append").parquet(path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_enrich)
+    return _start(writer, checkpoint, "append", available_now)
 
 
 def incremental_gold_sink(
@@ -445,14 +446,8 @@ def incremental_gold_sink(
         part = partial_aggregate(batch_df, keys, spec)
         part.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply)
+    return _start(writer, checkpoint, "append", available_now)
 
 
 def read_incremental_gold(
@@ -625,42 +620,30 @@ def avro_stream_sink(
     available_now: bool = False,
     trigger_seconds: int | None = 5,
 ) -> StreamingQuery:
-    """Stream → Avro container files via the jar-less writer
-    (``sources/sinks.py:write_avro_distributed``) inside
-    ``foreachBatch`` — each micro-batch lands under
-    ``<path>/batch=<epoch>/`` so replays of an epoch OVERWRITE that
-    epoch's directory instead of duplicating rows (epoch-keyed
-    idempotence, same discipline as ``incremental_gold_sink``); the
+    """Stream → Avro container files through the jar-less
+    ``format("avro_lite")`` writer inside ``foreachBatch`` — each
+    micro-batch overwrites ``<path>/batch=<epoch>/``, so a replayed
+    epoch REPLACES that epoch's files instead of duplicating rows
+    (epoch-keyed idempotence, same discipline as
+    ``incremental_gold_sink``; the writer's two-phase overwrite swaps
+    the files at commit and lands none for empty partitions). The
     checkpoint guarantees each epoch is delivered at least once, the
     directory key collapses retries. Downstream reads the whole prefix
-    with ``read_avro_distributed``. At 100 TB the JVM spark-avro
-    streaming sink replaces this; the semantics are identical."""
-    import shutil
-
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.sinks import (
-        write_avro_distributed,
-    )
+    with ``spark.read.format("avro_lite")``. At 100 TB the JVM
+    spark-avro streaming sink replaces this; the semantics are
+    identical."""
+    import os
 
     def _land(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
+        (
+            batch_df.write.format("avro_lite")
+            .mode("overwrite")
+            .option("codec", codec)
+            .save(os.path.join(path, f"batch={epoch_id}"))
+        )
 
-        out = os.path.join(path, f"batch={epoch_id}")
-        if os.path.isdir(out):  # replayed epoch: replace, don't duplicate
-            shutil.rmtree(out)
-        if batch_df.isEmpty():
-            return
-        write_avro_distributed(batch_df, out, codec=codec)
-
-    writer = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_land)
+    return _start(writer, checkpoint, "append", available_now, trigger_seconds)
 
 
 def cdc_snapshot_stream_sink(
@@ -718,16 +701,8 @@ def cdc_snapshot_stream_sink(
             ts_col=ts_col, op_col=op_col, seq_col=seq_col,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply)
+    return _start(writer, checkpoint, "update", available_now, trigger_seconds)
 
 
 def hll_register_store_sink(
@@ -772,33 +747,16 @@ def hll_register_store_sink(
             return
         spark = batch_df.sparkSession
         fresh = hll_partials(batch_df, keys, value_col, p=p)
-        try:
-            current = spark.read.parquet(target_dir)
-        except AnalysisException as exc:
-            # Only a MISSING store means "first batch". Any other read
-            # failure (IO, permissions, corrupt footer) must fail the
-            # batch so the checkpoint retries it — swallowing it would
-            # overwrite the store with this batch's registers alone and
-            # silently discard all accumulated distinct-count state.
-            msg = str(exc)
-            if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-                raise
+        current = _read_existing(spark, target_dir)
+        if current is None:  # first batch: no store yet
             current = spark.createDataFrame([], fresh.schema)
         merged = hll_merge(
             current.unionByName(fresh), keys
         ).localCheckpoint(eager=True)  # materialize before overwrite
         merged.write.mode("overwrite").parquet(target_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply)
+    return _start(writer, checkpoint, "update", available_now, trigger_seconds)
 
 
 def retractable_gold_sink(
@@ -836,14 +794,8 @@ def retractable_gold_sink(
         part = retractable_update(None, signed, keys, measures)
         part.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply)
+    return _start(writer, checkpoint, "append", available_now)
 
 
 def read_retractable_gold(
@@ -941,14 +893,8 @@ def ann_ingest_sink(
             json.dump(state, f)
         os.replace(tmp, state_path)  # atomic: readers never see a torn file
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply)
+    return _start(writer, checkpoint, "append", available_now)
 
 
 def ann_ingest_sink_versioned(
@@ -1078,11 +1024,5 @@ def ann_ingest_sink_versioned(
         if bootstrap:
             ann_store_publish(store_root, version)
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = stream.writeStream.foreachBatch(_apply)
+    return _start(writer, checkpoint, "append", available_now)

@@ -1,5 +1,6 @@
 """Pure-Python Avro WRITER (sources/avro_lite.py) and the distributed
-Avro sink (sources/sinks.py:write_avro_distributed).
+jar-less Avro sink it backs, ``df.write.format("avro_lite")``
+(sources/avro_datasource.py).
 
 The writer closes the jar-less Avro round trip: encode → decode must be
 the identity, proven (a) on a synthetic schema exercising every
@@ -7,8 +8,8 @@ supported shape (unions, enums, arrays, maps, fixed, logical
 decimal/date/timestamp), (b) by RE-ENCODING the records of the
 reference's real Debezium capture (reference
 testing/streaming.public.order.avro) and decoding them back bit-equal,
-and (c) Spark-side: entity DataFrame → distributed sink → distributed
-scan → identical rows.
+and (c) Spark-side: entity DataFrame → format("avro_lite") sink →
+format("avro_lite") scan → identical rows.
 """
 
 from __future__ import annotations
@@ -20,12 +21,6 @@ import os
 import pytest
 
 from dea05_e2e_kafka_streaming_pipeline_spark.sources import avro_lite
-from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
-    read_avro_distributed,
-)
-from dea05_e2e_kafka_streaming_pipeline_spark.sources.sinks import (
-    write_avro_distributed,
-)
 
 ORDERS_AVRO = "/root/reference/testing/streaming.public.order.avro"
 
@@ -144,18 +139,20 @@ def test_spark_schema_mapping_round_trip(spark):
 
 
 def test_distributed_sink_scan_round_trip(spark, tmp_path):
-    """orders entity → write_avro_distributed → read_avro_distributed
-    lands the same rows (date + decimal columns survive both hops)."""
+    """orders entity → format("avro_lite") write → format("avro_lite")
+    scan lands the same rows and schema (date + decimal columns survive
+    both hops), one container file per input partition."""
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.entities import (
         load_orders,
     )
 
     df = load_orders(spark, "/root/testdata/sf0.001").limit(500).repartition(3)
     out = str(tmp_path / "orders_avro")
-    schema = write_avro_distributed(df, out, codec="deflate")
-    assert schema["type"] == "record"
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))
-    back = read_avro_distributed(spark, out)
+    df.write.format("avro_lite").mode("overwrite").option(
+        "codec", "deflate"
+    ).save(out)
+    assert len([p for p in os.listdir(out) if p.endswith(".avro")]) == 3
+    back = spark.read.format("avro_lite").load(out)
     assert back.schema == df.schema
     want = sorted(map(tuple, df.collect()))
     got = sorted(map(tuple, back.collect()))
@@ -169,7 +166,10 @@ def test_sink_skips_empty_partitions(spark, tmp_path):
 
     df = load_orders(spark, "/root/testdata/sf0.001").limit(5).repartition(8)
     out = str(tmp_path / "sparse")
-    write_avro_distributed(df, out)
+    df.write.format("avro_lite").mode("overwrite").save(out)
     parts = [p for p in os.listdir(out) if p.endswith(".avro")]
     assert 0 < len(parts) <= 5
-    assert read_avro_distributed(spark, out).count() == 5
+    assert spark.read.format("avro_lite").load(out).count() == 5
+    # an all-empty overwrite clears the directory and lands no file
+    df.limit(0).write.format("avro_lite").mode("overwrite").save(out)
+    assert not [p for p in os.listdir(out) if p.endswith(".avro")]

@@ -60,19 +60,37 @@ def test_file_inventory_fallback_without_scan(spark):
 
 
 def test_jar_gated_paths_raise_cleanly(spark, tmp_path):
-    """Avro/Delta need jars absent from this container; the registry
-    must surface actionable errors, not raw JVM stack traces."""
+    """Delta needs a jar absent from the vanilla-Spark test session; the
+    registry must surface an actionable error, not a raw JVM stack
+    trace."""
+    import pytest
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
+        read_delta,
+    )
+
+    with pytest.raises(RuntimeError, match="delta"):
+        read_delta(spark, str(tmp_path / "nope_delta"))
+
+
+def test_read_avro_falls_back_to_avro_lite(spark, tmp_path):
+    """Without the spark-avro jar, read_avro reads through the jar-less
+    format("avro_lite") source; a failure that is not "source missing"
+    (here: no such path) still raises."""
     import pytest
 
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
         read_avro,
-        read_delta,
     )
 
-    with pytest.raises(RuntimeError, match="spark-avro"):
+    df = load_table(spark, SF_SMOKE, "orders").limit(20)
+    out = str(tmp_path / "orders_avro")
+    df.write.format("avro_lite").mode("overwrite").save(out)
+    back = read_avro(spark, out)
+    assert back.schema == spark.read.format("avro_lite").load(out).schema
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+    with pytest.raises(Exception, match="no container files"):
         read_avro(spark, str(tmp_path / "nope.avro"))
-    with pytest.raises(RuntimeError, match="delta"):
-        read_delta(spark, str(tmp_path / "nope_delta"))
 
 
 def test_write_delta_jar_gated(spark, tmp_path):

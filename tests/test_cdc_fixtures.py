@@ -153,13 +153,14 @@ def test_normalize_cdc_delete_surfaces_before_image(spark):
     assert rows[0]._cdc_op == "d"
 
 
-def test_read_avro_fallback_end_to_end(spark):
-    """S9 functional without the spark-avro jar: read_avro(fallback=True)
-    decodes the real capture (schema derived from the embedded writer
-    schema) and feeds decode_cdc_orders unchanged."""
+def test_read_avro_without_jar_end_to_end(spark):
+    """S9 functional without the spark-avro jar: read_avro detects the
+    missing JVM source, reads through format("avro_lite") (schema
+    derived from the embedded writer schema) and feeds
+    decode_cdc_orders unchanged."""
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import read_avro
 
-    env = read_avro(spark, ORDERS_AVRO, fallback=True)
+    env = read_avro(spark, ORDERS_AVRO)
     assert "after" in env.columns and "op" in env.columns
     assert env.schema["after"].dataType["order_amount"].dataType.simpleString() == (
         "decimal(10,2)"
@@ -181,20 +182,16 @@ def test_avro_lite_truncated_varint_raises_eoferror():
         r.long()
 
 
-def test_read_avro_distributed_matches_driver_fallback(spark):
-    """The distributed (binaryFile + mapInPandas) jar-less Avro scan
-    must decode the reference's REAL Debezium capture identically to the
-    driver-side fallback reader."""
+def test_format_avro_lite_matches_driver_reader(spark):
+    """The distributed jar-less Avro scan, format("avro_lite"), must
+    decode the reference's REAL Debezium capture identically to the
+    driver-side reference reader."""
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.avro_lite import (
         read_avro_as_dataframe,
     )
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
-        read_avro_distributed,
-    )
 
-    path = "/root/reference/testing/streaming.public.order.avro"
-    want = read_avro_as_dataframe(spark, path)
-    got = read_avro_distributed(spark, path)
+    want = read_avro_as_dataframe(spark, ORDERS_AVRO)
+    got = spark.read.format("avro_lite").load(ORDERS_AVRO)
     assert got.schema == want.schema
     key = lambda r: (r["after"]["order_id"], r["op"], r["ts_ms"])
     got_rows = sorted((r.asDict(recursive=True) for r in got.collect()), key=key)
@@ -202,9 +199,9 @@ def test_read_avro_distributed_matches_driver_fallback(spark):
     assert got_rows == want_rows
 
 
-def test_read_avro_schema_header_only_and_marker_skip(tmp_path):
-    """The distributed scan's driver peek must read only the container
-    header and must skip _SUCCESS/.crc-style marker files."""
+def test_read_avro_schema_header_only_and_marker_skip(spark, tmp_path):
+    """format("avro_lite")'s driver peek must read only the container
+    header, and its listing must skip _SUCCESS/.crc-style marker files."""
     import shutil
 
     from dea05_e2e_kafka_streaming_pipeline_spark.sources.avro_lite import (
@@ -212,7 +209,7 @@ def test_read_avro_schema_header_only_and_marker_skip(tmp_path):
         read_avro_schema,
     )
 
-    src = "/root/reference/testing/streaming.public.order.avro"
+    src = ORDERS_AVRO
     schema_full, _ = read_avro(src)
     assert read_avro_schema(src) == schema_full
     # directory with markers that sort before the data file
@@ -221,11 +218,5 @@ def test_read_avro_schema_header_only_and_marker_skip(tmp_path):
     (d / "_SUCCESS").write_bytes(b"")
     (d / ".part-0.crc").write_bytes(b"\x00\x01")
     shutil.copy(src, d / "part-0.avro")
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
-        read_avro_distributed,
-    )
-    from dea05_e2e_kafka_streaming_pipeline_spark.session import get_spark
-
-    spark = get_spark(app_name="engine-tests")
-    got = read_avro_distributed(spark, str(d))
+    got = spark.read.format("avro_lite").load(str(d))
     assert got.count() > 0

@@ -493,6 +493,39 @@ def test_upsert_batch_clears_fully_deleted_buckets(spark, tmp_path):
     assert list(target.glob("bucket=*")) == []
 
 
+def test_upsert_batch_schema_mismatch_raises_and_keeps_target(spark, tmp_path):
+    """Only a MISSING target counts as the first batch: a batch carrying
+    a column the target lacks must fail, not be merged against an
+    empty target and overwrite the touched buckets with its rows."""
+    from pyspark.errors import AnalysisException
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+        upsert_batch_into_parquet,
+    )
+
+    target = str(tmp_path / "silver")
+    upsert_batch_into_parquet(
+        _changes(spark, [(k, float(k), "c", 1) for k in range(1, 9)]),
+        target,
+        key="order_id",
+        n_buckets=4,
+    )
+
+    def state():
+        return sorted(
+            map(tuple, spark.read.parquet(target).select("order_id", "amount").collect())
+        )
+
+    before = state()
+    wider = spark.createDataFrame(
+        [(1, 99.0, "new", "u", 2)],
+        "order_id long, amount double, note string, _cdc_op string, _cdc_ts_ms long",
+    )
+    with pytest.raises(AnalysisException):
+        upsert_batch_into_parquet(wider, target, key="order_id", n_buckets=4)
+    assert state() == before
+
+
 def test_stream_upsert_sink_converges_across_batches(spark, tmp_path):
     import pyspark.sql.types as T
 
@@ -883,14 +916,11 @@ def test_metrics_listener_captures_batches(spark, tmp_path):
 
 
 def test_avro_stream_sink_round_trip(spark, tmp_path):
-    """Stream → jar-less Avro container sink → distributed Avro scan:
-    every landed row survives with its schema, and the epoch-keyed
-    layout exists for idempotent replay."""
+    """Stream → jar-less format("avro_lite") sink → format("avro_lite")
+    scan: every landed row survives with its schema, and the
+    epoch-keyed layout exists for idempotent replay."""
     import os
 
-    from dea05_e2e_kafka_streaming_pipeline_spark.sources.registry import (
-        read_avro_distributed,
-    )
     from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
         avro_stream_sink,
     )
@@ -907,10 +937,36 @@ def test_avro_stream_sink_round_trip(spark, tmp_path):
     q.awaitTermination(120)
     batches = [d for d in os.listdir(out) if d.startswith("batch=")]
     assert batches
-    back = read_avro_distributed(spark, out)
+    back = spark.read.format("avro_lite").load(out)
     assert back.count() == n
     src = load_table(spark, SF_SMOKE, "events")
     assert sorted(back.columns) == sorted(src.columns)
+
+
+def test_avro_stream_sink_rerun_replaces_epoch(spark, tmp_path):
+    """Re-running the sink from a FRESH checkpoint replays epoch 0 into
+    the same ``batch=0`` directory: its files are replaced, so the
+    prefix holds each row once, not twice."""
+    import os
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.streaming.pipeline import (
+        avro_stream_sink,
+    )
+
+    n = _land_events_json(spark, tmp_path / "landing_rr")
+    out = str(tmp_path / "avro_rr")
+    for run in ("a", "b"):
+        stream = file_stream(spark, str(tmp_path / "landing_rr"), EVENTS_SCHEMA)
+        avro_stream_sink(
+            stream,
+            out,
+            checkpoint=str(tmp_path / f"ckpt_rr_{run}"),
+            available_now=True,
+        ).awaitTermination(120)
+    assert [d for d in os.listdir(out) if d.startswith("batch=")] == ["batch=0"]
+    back = spark.read.format("avro_lite").load(out)
+    assert back.count() == n
+    assert back.distinct().count() == back.count()
 
 
 def test_kafka_surrogate_lifecycle_end_to_end(spark, tmp_path):

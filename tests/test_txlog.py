@@ -235,3 +235,63 @@ def test_txlog_datasource_write_append_overwrite(spark, tmp_path):
     # round-trip interop: helper commit then data-source read
     commit_snapshot(spark.range(3, 5), t, mode="append")
     assert spark.read.format("txlog").load(t).count() == 5
+
+
+def test_commit_snapshot_refuses_already_published_version(
+    spark, tmp_path, monkeypatch
+):
+    """commit_snapshot publishes through the same step as
+    format('txlog'): if another writer publishes the version it is
+    writing first, the commit raises and the winner's manifest stands."""
+    import pytest
+
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources import txlog
+
+    t = str(tmp_path / "race")
+    commit_snapshot(spark.range(0, 4), t)
+    real_publish = txlog.publish_snapshot
+
+    def racing_publish(*args):
+        # the competitor lands version 1 between our data write and publish
+        monkeypatch.setattr(txlog, "publish_snapshot", real_publish)
+        spark.range(100, 102).write.format("txlog").mode("append").save(t)
+        return real_publish(*args)
+
+    monkeypatch.setattr(txlog, "publish_snapshot", racing_publish)
+    with pytest.raises(RuntimeError, match="already committed"):
+        commit_snapshot(spark.range(4, 8), t)
+    assert snapshot_versions(t) == [0, 1]
+    assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [
+        0, 1, 2, 3, 100, 101,
+    ]
+
+
+def test_commits_alternate_between_helper_and_datasource(spark, tmp_path):
+    """commit_snapshot and df.write.format('txlog') share one manifest
+    protocol: alternating commits get consecutive versions, and every
+    version lists exactly the files its mode implies."""
+    from dea05_e2e_kafka_streaming_pipeline_spark.sources.txlog import (
+        snapshot_files,
+    )
+
+    t = str(tmp_path / "mixed")
+    commit_snapshot(spark.range(0, 3), t)
+    spark.range(3, 5).write.format("txlog").mode("append").save(t)
+    commit_snapshot(spark.range(5, 6), t, mode="append")
+    spark.range(6, 8).write.format("txlog").mode("overwrite").save(t)
+    commit_snapshot(spark.range(8, 9), t, mode="append")
+    assert snapshot_versions(t) == [0, 1, 2, 3, 4]
+
+    def data_dirs(v):
+        return {os.path.basename(os.path.dirname(f)) for f in snapshot_files(t, v)}
+
+    assert data_dirs(2) == {"data-v000000", "data-v000001", "data-v000002"}
+    assert data_dirs(4) == {"data-v000003", "data-v000004"}
+    for v in range(5):
+        assert all(os.path.exists(f) for f in snapshot_files(t, v))
+    want = {0: range(3), 1: range(5), 2: range(6), 3: range(6, 8), 4: range(6, 9)}
+    for v, ids in want.items():
+        got = sorted(r.id for r in read_snapshot(spark, t, v).collect())
+        assert got == list(ids), v
+        ds = spark.read.format("txlog").option("versionAsOf", v).load(t)
+        assert sorted(r.id for r in ds.collect()) == list(ids), v
